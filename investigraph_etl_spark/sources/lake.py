@@ -221,10 +221,10 @@ class HashLakeTable:
         # only buckets whose file lists changed get new bucket-manifest
         # files (the Iceberg manifest-reuse analog)
         self._persisted = self._manifest
-        # async-compaction state (see merge(compact_mode="async")):
-        # _compact_future is None or (future, consumed, out_dir) where
-        # consumed maps bucket -> number of delta sets the running job
-        # snapshotted (harvest drops exactly that prefix per bucket)
+        # background-fold state (see _compact): _compact_future is None
+        # or (future, consumed) where consumed maps bucket -> number of
+        # delta sets the running fold snapshotted (its apply drops
+        # exactly that prefix per bucket)
         self._compact_pool = None
         self._compact_future = None
         # compaction rewrites sort each bucket by key and roll files at
@@ -335,9 +335,7 @@ class HashLakeTable:
     @staticmethod
     def _materialize(mdir: pathlib.Path, doc: dict) -> dict:
         """Resolve a manifest list's ``bucket_refs`` into the in-memory
-        ``buckets``/``deltas`` maps (legacy inline docs pass through)."""
-        if "bucket_refs" not in doc:
-            return doc
+        ``buckets``/``deltas`` maps."""
         buckets: dict[str, list] = {}
         deltas: dict[str, list] = {}
         file_stats: dict[str, list] = {}
@@ -586,8 +584,9 @@ class HashLakeTable:
     @staticmethod
     def _file_commit_version(path: str) -> int:
         """The commit version that WROTE a data file, parsed from its
-        directory name (``c%06d`` delta, ``c%06dx``/``c%06da``
-        compaction).  Every row in a file has ``_commit`` ≤ this
+        directory name (``c%06d`` delta, ``c%06dx`` compaction;
+        ``c%06da`` is the background-compaction name older lakes
+        used).  Every row in a file has ``_commit`` ≤ this
         version, so files at version ≤ v cannot contain rows committed
         after v — the file-level pruning :meth:`read_changes` uses."""
         import re
@@ -934,19 +933,19 @@ class HashLakeTable:
         LWW(LWW(batch) ∪ target)``); what changes is economics.  The
         reduce is a winners hash-agg + broadcast semi-join that costs
         ~0.8s per micro-batch at local[32] regardless of how few
-        duplicates it removes (measured, tools/profile_write.py), while
-        unreduced deltas only cost bytes ∝ the duplicate fraction.
+        duplicates it removes (measured; ``perfbench/run.py --trace 1``
+        breaks a commit into these phases), while unreduced deltas only
+        cost bytes ∝ the duplicate fraction.
         Policy: skip for micro-batches (low in-batch dup ratio — the
         streaming tailer's case), keep for bulk replays whose dup
         ratio is high (events/doc ≫ 1) where the reduce pays for
         itself in write volume.
 
-        ``compact_mode`` — ``"sync"`` folds threshold buckets inline
-        (bounded latency spike), ``"async"`` runs the same fold on a
-        background thread so it overlaps the next commits' write jobs
-        (the Iceberg maintenance-process analog; harvested into the
-        manifest at the next commit), ``"off"`` leaves compaction to
-        an explicit :meth:`compact` call.
+        ``compact_mode`` — ``"sync"`` folds threshold buckets inline on
+        the calling thread (bounded latency spike), ``"async"`` submits
+        the same fold (:meth:`_compact`) to a background thread so it
+        overlaps the next commits' write jobs (applied to the manifest
+        at a later commit).  Any other value raises ``ValueError``.
 
         Exactly-once: Structured Streaming batch ids are monotonic and a
         retried batch re-runs with the same id, so a batch with
@@ -957,6 +956,10 @@ class HashLakeTable:
         """
         import time as _time
 
+        if compact_mode not in ("sync", "async"):
+            raise ValueError(
+                f"compact_mode must be 'sync' or 'async', got {compact_mode!r}"
+            )
         if batch_id <= self.last_committed(stream_id):
             return {"skipped": True, "version": self.version}
         _t0 = _time.monotonic()
@@ -1129,14 +1132,17 @@ class HashLakeTable:
         per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
         compacted = 0
         _t_pre_compact = _time.monotonic()
-        if full and compact_mode == "sync":
-            # mode-switch guard: a still-inflight async fold snapshotted
-            # delta prefixes that a sync fold would also consume — land
-            # it first or the harvest would drop the wrong delta sets
-            self._harvest_compaction(block=True)
-            compacted = self._compact_into_manifest(full[:per_commit], out_version)
-        elif full and compact_mode == "async":
-            compacted = self._schedule_compaction(full[:per_commit], out_version)
+        if full:
+            if compact_mode == "sync":
+                # mode-switch guard: a still-inflight async fold
+                # snapshotted delta prefixes that a sync fold would also
+                # consume — land it first or its apply would drop the
+                # wrong delta sets
+                self._harvest_compaction(block=True)
+            compacted = self._compact(
+                full[:per_commit], out_version,
+                background=compact_mode == "async",
+            )
         _t_compact = _time.monotonic()
 
         self._commit_manifest()
@@ -1156,9 +1162,66 @@ class HashLakeTable:
         }
 
     # ------------------------------------------------------- compaction
-    def _compact_into_manifest(self, buckets: list[int], version: int) -> int:
-        """Fold base ∪ deltas into a new base for ``buckets``, updating
-        ``self._manifest`` in place (caller writes the manifest).
+    def _compact(
+        self, buckets: list[int], version: int, *, background: bool = False
+    ) -> int:
+        """Fold ``buckets``' base ∪ deltas into new bases — the one
+        compaction path behind sync merges, async merges and
+        :meth:`compact`.  Returns the number of buckets folded
+        (inline) or scheduled (``background``).
+
+        Snapshots the bucket → files mapping NOW and runs :meth:`_fold`
+        over it.  Inline (sync merges, :meth:`compact`) the fold runs
+        on the calling thread, so the caller's job group and streaming
+        local properties still apply, and :meth:`_apply_fold` lands it
+        at once.  ``background=True`` submits the same fold to a
+        one-slot pool (the Iceberg maintenance-process analog) and
+        :meth:`_harvest_compaction` applies it at a later commit; a
+        busy pool skips scheduling — the buckets stay over threshold
+        and are retried next commit.
+
+        The snapshot stays valid while the fold runs: single-writer,
+        only compaction removes files from the manifest, and only one
+        compaction runs at a time.  Concurrent delta appends to the
+        same buckets are safe because the apply drops exactly the
+        per-bucket delta-set *prefix* the fold consumed, keeping
+        anything appended after the snapshot.  The caller persists the
+        manifest.
+
+        Crash safety: if the process dies mid-fold the manifest never
+        references the new files; :meth:`vacuum` removes the orphans.
+        Do not run :meth:`vacuum` while a compaction is inflight (it
+        would delete the fold's not-yet-referenced output).
+        """
+        if background and self._compact_future is not None:
+            return 0
+        snapshot = {str(b): self._bucket_files([b]) for b in buckets}
+        if not any(snapshot.values()):
+            return 0
+        deltas = self._manifest.get("deltas", {})
+        consumed = {b: len(deltas.get(b, [])) for b in snapshot}
+        out_dir = self.root / "data" / f"c{version:06d}x"
+        if not background:
+            return self._apply_fold(
+                *self._fold(snapshot, out_dir, self.schema), consumed
+            )
+        import concurrent.futures
+
+        if self._compact_pool is None:
+            self._compact_pool = concurrent.futures.ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="lake-compact"
+            )
+        fut = self._compact_pool.submit(self._fold, snapshot, out_dir, self.schema)
+        self._compact_future = (fut, consumed)
+        return len(snapshot)
+
+    def _fold(
+        self, snapshot: dict[str, list[str]], out_dir: pathlib.Path,
+        payload: StructType,
+    ) -> tuple[dict[str, list[str]], dict[str, list]]:
+        """LWW-fold the snapshotted files into new per-bucket bases.
+        Touches no table state; returns (bucket → new base files,
+        file → [min,max] key stats).
 
         The rewrite sorts each bucket by key *within* its write task
         (``sortWithinPartitions`` — a local sort, no exchange) and, when
@@ -1168,116 +1231,21 @@ class HashLakeTable:
         manifest) let :meth:`read_keys` prune to O(1) base files per
         bucket.  Delta files stay unsorted (the hot write path never
         sorts, see merge step 4) — at 100 TB the compacted base is
-        ~everything, so skipping lives where the bytes are."""
+        ~everything, so skipping lives where the bytes are.  The write
+        fans out to 4× the folded buckets for the same task-balance
+        reason as merge step 4."""
         from investigraph_etl_spark.operators.lww import lww_dedup
 
-        files = self._bucket_files(buckets)
-        if not files:
-            return 0
+        files = [f for fl in snapshot.values() for f in fl]
         bucket_expr = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
         merged = lww_dedup(
-            self._scan(files, self.schema),
+            self._scan(files, payload),
             self.key,
             "_seq",
             extra_keys=("_commit",),
             winners_strategy="auto",
         ).withColumn("_bucket", bucket_expr)
-        merged = merged.repartition(max(len(buckets), 1), "_bucket")
-        merged = merged.sortWithinPartitions("_bucket", self.key)
-        out_dir = self.root / "data" / f"c{version:06d}x"
-        writer = merged.write
-        if self.compact_target_file_rows:
-            writer = writer.option(
-                "maxRecordsPerFile", self.compact_target_file_rows
-            )
-        writer.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
-        new_base: dict[str, list[str]] = {}
-        for bdir in out_dir.glob("_bucket=*"):
-            b = bdir.name.split("=", 1)[1]
-            new_base[b] = sorted(str(p) for p in bdir.glob("*.parquet"))
-        bases = dict(self._manifest["buckets"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        file_stats = dict(self._manifest.get("file_stats", {}))
-        for f in files:
-            file_stats.pop(f, None)  # superseded by the new base
-        file_stats.update(
-            self._harvest_file_stats(
-                [f for fl in new_base.values() for f in fl]
-            )
-        )
-        for b in buckets:
-            bases[str(b)] = new_base.get(str(b), [])
-            deltas.pop(str(b), None)
-        self._manifest = {
-            **self._manifest,
-            "buckets": bases,
-            "deltas": deltas,
-            "file_stats": file_stats,
-        }
-        return len(buckets)
-
-    # ------------------------------------------------- async compaction
-    def _schedule_compaction(self, buckets: list[int], version: int) -> int:
-        """Start a background fold of ``buckets``' base ∪ deltas (at
-        most ONE inflight job; a busy pool skips scheduling — the
-        buckets stay over threshold and are retried next commit).
-
-        The job is pure compute: it snapshots the bucket→files mapping
-        NOW (single-writer: only compaction removes files from the
-        manifest, and only one compaction runs at a time, so the
-        snapshot stays valid), writes new bases to a fresh directory,
-        and returns them.  Manifest mutation happens exclusively on the
-        committer thread in :meth:`_harvest_compaction` — concurrent
-        delta appends to the same buckets are safe because harvest
-        drops exactly the per-bucket delta-set *prefix* the job
-        consumed, keeping anything appended after the snapshot.
-
-        Crash safety: if the process dies mid-job the manifest never
-        references the new files; :meth:`vacuum` removes the orphans.
-        Do not run :meth:`vacuum` while a compaction is inflight (it
-        would delete the job's not-yet-referenced output).
-        """
-        if self._compact_future is not None:
-            return 0
-        import concurrent.futures
-
-        if self._compact_pool is None:
-            self._compact_pool = concurrent.futures.ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="lake-compact"
-            )
-        bases = self._manifest["buckets"]
-        deltas = self._manifest.get("deltas", {})
-        snapshot = {
-            str(b): list(bases.get(str(b), []))
-            + [f for dset in deltas.get(str(b), []) for f in dset]
-            for b in buckets
-        }
-        consumed = {str(b): len(deltas.get(str(b), [])) for b in buckets}
-        out_dir = self.root / "data" / f"c{version:06d}a"
-        stored = StructType(list(self.full_schema.fields) + [_COMMIT])
-        fut = self._compact_pool.submit(
-            self._compute_compacted, snapshot, out_dir, stored
-        )
-        self._compact_future = (fut, consumed)
-        return len(snapshot)
-
-    def _compute_compacted(
-        self, snapshot: dict[str, list[str]], out_dir, stored: StructType
-    ) -> tuple[dict[str, list[str]], dict[str, list]]:
-        """Background-thread body: LWW-fold the snapshotted files into
-        new per-bucket bases (key-sorted within each bucket, see
-        :meth:`_compact_into_manifest`).  Touches no table state;
-        returns (bucket → new base files, file → [min,max] key stats)."""
-        from investigraph_etl_spark.operators.lww import lww_dedup
-
-        files = [f for fl in snapshot.values() for f in fl]
-        bucket_expr = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
-        scan = self.spark.read.schema(stored).parquet(*files)
-        merged = lww_dedup(
-            scan, self.key, "_seq", extra_keys=("_commit",),
-            winners_strategy="auto",
-        ).withColumn("_bucket", bucket_expr)
-        merged = merged.repartition(max(len(snapshot), 1) * 4, "_bucket")
+        merged = merged.repartition(len(snapshot) * 4, "_bucket")
         merged = merged.sortWithinPartitions("_bucket", self.key)
         writer = merged.write
         if self.compact_target_file_rows:
@@ -1286,7 +1254,7 @@ class HashLakeTable:
             )
         writer.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
         new_base: dict[str, list[str]] = {b: [] for b in snapshot}
-        for bdir in pathlib.Path(out_dir).glob("_bucket=*"):
+        for bdir in out_dir.glob("_bucket=*"):
             b = bdir.name.split("=", 1)[1]
             new_base[b] = sorted(str(p) for p in bdir.glob("*.parquet"))
         new_stats = self._harvest_file_stats(
@@ -1294,17 +1262,16 @@ class HashLakeTable:
         )
         return new_base, new_stats
 
-    def _harvest_compaction(self, *, block: bool) -> int:
-        """Fold a finished background compaction into the in-memory
-        manifest (persisted by the caller's next manifest write).
-        Returns the number of buckets folded."""
-        if self._compact_future is None:
-            return 0
-        fut, consumed = self._compact_future
-        if not block and not fut.done():
-            return 0
-        new_base, new_stats = fut.result()  # re-raises background failures
-        self._compact_future = None
+    def _apply_fold(
+        self,
+        new_base: dict[str, list[str]],
+        new_stats: dict[str, list],
+        consumed: dict[str, int],
+    ) -> int:
+        """Swap a fold's new bases into the in-memory manifest: per
+        bucket, drop the old base and the ``consumed`` delta-set prefix
+        (with their stats) and keep any delta sets appended since the
+        snapshot.  Returns the number of buckets folded."""
         bases = dict(self._manifest["buckets"])
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
         file_stats = dict(self._manifest.get("file_stats", {}))
@@ -1329,6 +1296,18 @@ class HashLakeTable:
         }
         return len(new_base)
 
+    def _harvest_compaction(self, *, block: bool) -> int:
+        """Apply a finished background fold (``block=True`` waits for an
+        inflight one).  Returns the number of buckets folded."""
+        if self._compact_future is None:
+            return 0
+        fut, consumed = self._compact_future
+        if not block and not fut.done():
+            return 0
+        new_base, new_stats = fut.result()  # re-raises background failures
+        self._compact_future = None
+        return self._apply_fold(new_base, new_stats, consumed)
+
     def wait_for_compaction(self) -> int:
         """Block until any inflight background compaction lands, fold
         it in, and persist the manifest as a new version.  Call before
@@ -1341,8 +1320,9 @@ class HashLakeTable:
 
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Fold deltas into bases (Iceberg ``rewrite_data_files`` analog)
-        as a new table version.  ``buckets`` defaults to every bucket
-        that currently has deltas."""
+        as a new table version — the merge path's fold (:meth:`_compact`),
+        run inline on the calling thread.  ``buckets`` defaults to every
+        bucket that currently has deltas."""
         # land any inflight async fold first — single-compactor rule
         self._harvest_compaction(block=True)
         deltas = self._manifest.get("deltas", {})
@@ -1355,7 +1335,7 @@ class HashLakeTable:
             return {"compacted_buckets": 0, "version": self.version}
         version = self.version + 1
         self._manifest = {**self._manifest, "version": version}
-        n = self._compact_into_manifest(targets, version)
+        n = self._compact(targets, version)
         self._commit_manifest()
         return {"compacted_buckets": n, "version": version}
 

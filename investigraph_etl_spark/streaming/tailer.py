@@ -7,6 +7,12 @@ docs/run/parallelization.md) with Structured Streaming:
     readStream(parquet, maxFilesPerTrigger)
       → foreachBatch( normalize → LWW dedup → lake.merge )
 
+Each merge appends one delta commit; buckets that reach the delta
+threshold are folded back into their bases by the lake's one
+compaction fold, inline or in the background (``compact_mode``).
+The per-batch metrics record carries the merge's ``compacted_buckets``
+and phase ``timings``.
+
 Exactly-once = Structured Streaming checkpoint (at-least-once
 redelivery) + the lake's idempotent commit log keyed by batch id
 (SURVEY.md §2.9 T4).  A killed query resumed from the same checkpoint
@@ -67,7 +73,7 @@ def target_schema(with_lang: bool = False) -> StructType:
     return StructType(fields)
 
 
-def prepare_batch(events: DataFrame, *, salt_buckets: int = 0) -> DataFrame:
+def prepare_batch(events: DataFrame) -> DataFrame:
     """Normalize one (micro)batch for merge (narrow, no shuffle).
 
     In-batch LWW dedup happens inside ``lake.merge`` — folded with the
@@ -77,8 +83,6 @@ def prepare_batch(events: DataFrame, *, salt_buckets: int = 0) -> DataFrame:
     standalone reduced batch is needed (e.g. feeding a real Iceberg
     MERGE, whose cardinality check requires ≤1 source row per key).
     ``event_time`` is stream metadata (lag metrics), not table payload.
-    ``salt_buckets`` is accepted for signature stability and forwarded
-    by :func:`replay_batch`.
     """
     return normalize_events(events).drop("event_time")
 
@@ -105,32 +109,6 @@ class MetricsLog:
         if self.path:
             with self.path.open("a") as fh:
                 fh.write(json.dumps(record) + "\n")
-
-
-def tune_ingest_scan(
-    spark: SparkSession,
-    *,
-    max_partition_bytes: str = "8m",
-    open_cost: str = "1m",
-) -> None:
-    """Size parquet scan splits for micro-batch ingest.
-
-    A micro-batch is a handful of small binlog chunk files; at the
-    default 128 MB ``maxPartitionBytes`` + 4 MB open cost the whole
-    batch packs into 1-2 scan tasks, so scan + normalization run on a
-    sliver of the cluster while the bucket-exchange reduce side waits.
-    8 MB splits (with row-group-bounded chunk files — see
-    ``changelog.write_changelog``) fan the map side out to ~2 row
-    groups per task.  NOT applied by default: an interleaved A/B on
-    this host (8M events, 16 commits) measured the tuned config ~8%
-    SLOWER — when the batch fits the page cache, split scheduling
-    costs more than map-side parallelism buys.  The knob exists for
-    deployments where per-row map-side work dominates (remote object
-    storage, heavier normalization).  Runtime-settable conf — safe to
-    flip on a live session before starting the tailer.
-    """
-    spark.conf.set("spark.sql.files.maxPartitionBytes", max_partition_bytes)
-    spark.conf.set("spark.sql.files.openCostInBytes", open_cost)
 
 
 def tail_changelog(
@@ -165,8 +143,10 @@ def tail_changelog(
     for sustained micro-batch tailing, ``reduce_batch=False`` +
     ``compact_mode="async"`` is the measured-fastest policy (the
     in-batch LWW reduce costs more than the duplicate bytes it saves
-    on low-dup micro-batches, and async compaction overlaps the next
-    commits; see sources/lake.py).  Defaults stay conservative.
+    on low-dup micro-batches).  Both modes run the lake's single
+    compaction fold: ``"sync"`` inside the batch's merge, ``"async"``
+    on a background thread overlapping the next batches' commits (see
+    ``HashLakeTable._compact``).  Defaults stay conservative.
     ``derived`` — change-feed consumers refreshed after every batch's
     merge: anything with ``refresh(lake)`` keyed to the lake version —
     ``DerivedAggTable`` materialized views (operators/incremental.py)
@@ -257,6 +237,10 @@ def tail_changelog(
                 "lake_version": result.get("version"),
                 "skipped": result.get("skipped", False),
                 "touched_buckets": result.get("touched_buckets"),
+                # buckets folded (sync) or scheduled (async) by this
+                # merge, and its plan/write/compact phase seconds
+                "compacted_buckets": result.get("compacted_buckets"),
+                "timings": result.get("timings"),
                 "wall_time": time.time(),
             }
         )

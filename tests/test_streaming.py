@@ -44,6 +44,12 @@ def test_stream_replay_equals_oracle(spark, tmp_path, lake):
     assert len(lines) >= 3
     assert all("events_per_sec" in l and "lake_version" in l for l in lines)
     assert sum(l["rows_in"] for l in lines) == 3000
+    # the merge's compaction count and phase timings ride along
+    assert all(
+        isinstance(l["compacted_buckets"], int)
+        and set(l["timings"]) == {"plan_sec", "write_sec", "compact_sec"}
+        for l in lines
+    )
 
 
 def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path, lake):

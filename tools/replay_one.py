@@ -41,7 +41,6 @@ from investigraph_etl_spark.streaming.tailer import (  # noqa: E402
     change_schema,
     prepare_batch,
     target_schema,
-    tune_ingest_scan,
 )
 
 
@@ -81,14 +80,6 @@ def main() -> None:
             ),
         },
     )
-
-    # ingest-path scan splits: OFF by default — measured ~8% SLOWER on
-    # this host (8M events / 16 commits, interleaved A/B: 40.0-41.1s
-    # tuned vs 37.1-38.4s default); split scheduling costs more than
-    # the map-side parallelism buys when the batch fits the page cache.
-    # SPARK_GRAFT_INGEST_SPLITS=1 opts in (see tune_ingest_scan).
-    if os.environ.get("SPARK_GRAFT_INGEST_SPLITS", "0") == "1":
-        tune_ingest_scan(spark)
 
     # --- warmup: full code path, small log
     warm_log = f"{work}/warm_log"
