@@ -41,7 +41,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from investigraph_etl_spark.session import get_spark
+from investigraph_etl_spark.session import get_spark, local_cores, resolve_master
 from investigraph_etl_spark.sources.lake import HashLakeTable
 from investigraph_etl_spark.streaming.tailer import (
     change_schema,
@@ -196,7 +196,7 @@ def main(argv: list[str] | None = None) -> None:
                 json.dumps(
                     {
                         "engine": "investigraph_etl_spark",
-                        "master": args.master or "local[*]",
+                        "master": resolve_master(args.master, local_cores())[0],
                         "num_buckets": args.num_buckets,
                         "env": env,
                     }

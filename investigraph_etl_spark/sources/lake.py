@@ -1075,14 +1075,11 @@ class HashLakeTable:
         # directory listing yields the touched-bucket set — no separate
         # distinct() job.  NO global sort — sorting rows that carry
         # token arrays measurably inverse-scales (BENCH.md).
-        # Fan = 4× buckets: hashing 32 bucket values into exactly 32
-        # slots leaves ~1/e of them empty and the fullest with 2-3
-        # buckets (2-3× task imbalance on the write stage, measured
-        # ~+20%); 4× slots spread the same 32 buckets nearly 1:1 while
-        # each bucket still lands wholly in ONE task → still ≤1 delta
-        # file per bucket per commit.  Explicit-N repartition is exempt
-        # from AQE coalescing, so the fan survives.
-        reduced = reduced.repartition(self.num_buckets * 4, "_bucket")
+        # Fan = 4 × min(buckets, cores) tasks (:meth:`_fan`, which
+        # records the measurement): the repartition on ``_bucket`` puts
+        # each bucket wholly in ONE task, so a commit still writes ≤1
+        # delta file per bucket when there are fewer tasks than buckets.
+        reduced = reduced.repartition(self._fan(self.num_buckets), "_bucket")
         out_dir = self.root / "data" / f"c{out_version:06d}"
         _t_plan = _time.monotonic()
         reduced.write.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
@@ -1096,6 +1093,7 @@ class HashLakeTable:
         file_stats.update(
             self._harvest_file_stats([f for fl in new_files.values() for f in fl])
         )
+        _t_stats = _time.monotonic()
 
         # 5. commit: append deltas, swap pointer
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
@@ -1146,6 +1144,7 @@ class HashLakeTable:
         _t_compact = _time.monotonic()
 
         self._commit_manifest()
+        _t_manifest = _time.monotonic()
         return {
             "skipped": False,
             "version": out_version,
@@ -1153,13 +1152,38 @@ class HashLakeTable:
             "compacted_buckets": compacted,
             # per-commit phase timings (microbatch metrics surface):
             # plan = driver-side prep up to the write action, write =
-            # the delta-write Spark job, compact = amortized folding
+            # the delta-write Spark job, stats = the footer-stats
+            # harvest of the written files, compact = amortized
+            # folding, manifest = persisting the manifest + pointer swap
             "timings": {
                 "plan_sec": round(_t_plan - _t0, 3),
                 "write_sec": round(_t_write - _t_plan, 3),
+                "stats_sec": round(_t_stats - _t_write, 3),
                 "compact_sec": round(_t_compact - _t_pre_compact, 3),
+                "manifest_sec": round(_t_manifest - _t_compact, 3),
             },
         }
+
+    def _fan(self, n: int) -> int:
+        """Write tasks for a job writing ``n`` buckets — the one fan-out
+        rule of the merge delta write (step 4) and the compaction fold:
+        ``4 × min(n, cores)``, cores = ``defaultParallelism``.
+
+        Every task pays Spark's fixed per-task cost whatever it writes,
+        so tasks past a few per core buy nothing.  Measured on a 4-core
+        host with ``perfbench/run.py --workload tail_serve --trace 1``
+        (seed 11): a fan of 4 × buckets (128 write tasks for 32 buckets)
+        gave each warm commit 137 tasks and 1.7–2.3 s of write for
+        0.75–1.0 executor CPU-s; this rule (16 write tasks) gives 25
+        tasks and 1.0–1.5 s, and commit p50 over seeds 11–20 falls
+        from 2.56 s to 1.55 s (medians).  The 4× keeps the stage
+        balanced: hashing n bucket values into n slots leaves ~1/e of
+        the slots empty and the fullest with 2-3 buckets (measured
+        ~+20% on the write stage), while 4 slots per bucket or per core
+        spread the load nearly evenly.  At ``local[32]`` with 32 buckets
+        the rule still gives 128.  Explicit-N repartition is exempt from
+        AQE coalescing, so the fan survives."""
+        return 4 * min(n, self.spark.sparkContext.defaultParallelism)
 
     # ------------------------------------------------------- compaction
     def _compact(
@@ -1232,8 +1256,9 @@ class HashLakeTable:
         bucket.  Delta files stay unsorted (the hot write path never
         sorts, see merge step 4) — at 100 TB the compacted base is
         ~everything, so skipping lives where the bytes are.  The write
-        fans out to 4× the folded buckets for the same task-balance
-        reason as merge step 4."""
+        fans out by the merge write's rule, 4 × min(folded buckets,
+        cores) tasks (:meth:`_fan`); each folded bucket lands in one
+        task, and only folded buckets get an output directory."""
         from investigraph_etl_spark.operators.lww import lww_dedup
 
         files = [f for fl in snapshot.values() for f in fl]
@@ -1245,7 +1270,7 @@ class HashLakeTable:
             extra_keys=("_commit",),
             winners_strategy="auto",
         ).withColumn("_bucket", bucket_expr)
-        merged = merged.repartition(len(snapshot) * 4, "_bucket")
+        merged = merged.repartition(self._fan(len(snapshot)), "_bucket")
         merged = merged.sortWithinPartitions("_bucket", self.key)
         writer = merged.write
         if self.compact_target_file_rows:

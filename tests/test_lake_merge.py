@@ -4,6 +4,8 @@ tombstone no-resurrection, schema evolution, bucket pruning."""
 
 from __future__ import annotations
 
+import pathlib
+
 import pandas as pd
 import pytest
 
@@ -605,6 +607,62 @@ def test_file_skipping_with_tombstones_and_async_compaction(spark, lake):
     # stats reference only files the manifest still points at
     current = set(lake._bucket_files())
     assert set(lake._manifest["file_stats"]) <= current
+
+
+@pytest.fixture()
+def lake32(spark, tmp_path):
+    return HashLakeTable.create(
+        spark, str(tmp_path / "lake32"), target_schema(), num_buckets=32
+    )
+
+
+def test_one_file_per_bucket_with_fewer_tasks_than_buckets(spark, lake32):
+    """The write fan follows the cores, not the bucket count: on the
+    4-core test session a 32-bucket lake writes with fewer tasks than
+    buckets, and each bucket must still land whole in one task — one
+    delta file per bucket per commit, and a fold writes only the
+    folded buckets."""
+    assert lake32._fan(lake32.num_buckets) < lake32.num_buckets
+    events = gen_events_pandas(0, 2000, seed=21, n_docs=400)
+    r = lake32.merge(prepare_batch(_spark_events(spark, events)), 0)
+    data = lake32.root / "data"
+    dirs = sorted((data / "c000001").glob("_bucket=*"))
+    assert r["touched_buckets"] == len(dirs) == lake32.num_buckets
+    assert all(len(list(d.glob("*.parquet"))) == 1 for d in dirs)
+    folded = [3, 7, 30]
+    assert lake32.compact(folded)["compacted_buckets"] == len(folded)
+    fold_dirs = sorted((data / "c000002x").glob("_bucket=*"))
+    assert sorted(int(d.name.split("=", 1)[1]) for d in fold_dirs) == folded
+    assert all(len(list(d.glob("*.parquet"))) == 1 for d in fold_dirs)
+    assert_pdf_equal(lake32.read().toPandas(), oracle_reduce(events))
+
+
+def test_manifest_scans_launch_no_listing_job(spark, lake32):
+    """read() and read_changes() pass the manifest's file list to the
+    scan; building either over more than 32 files (Spark's default
+    parallel-listing threshold) must run no Spark job, and a file
+    missing from disk must still raise."""
+    events = gen_events_pandas(0, 2000, seed=22, n_docs=400)
+    for bid, start in enumerate(range(0, 2000, 1000)):
+        lake32.merge(
+            prepare_batch(_spark_events(spark, events.iloc[start : start + 1000])),
+            bid,
+        )
+    files = lake32._bucket_files()
+    assert len(files) > 32
+    sc = spark.sparkContext
+    group = "test-manifest-scan-no-job"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        lake32.read()
+        lake32.read_changes(0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    pathlib.Path(files[0]).unlink()
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        lake32.read()
 
 
 # ------------------------- IcebergLakeTable (jar-gated) dry-run cover

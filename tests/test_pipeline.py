@@ -374,8 +374,11 @@ def test_stage_pipe_cli_chain(spark, tmp_path, capsys):
 def test_settings_cli(capsys):
     """reference `investigraph settings` parity (cli.py:188-196)."""
     from investigraph_etl_spark.run import main
+    from investigraph_etl_spark.session import local_cores
 
     main(["settings"])
     out = json.loads(capsys.readouterr().out.strip())
     assert out["engine"] == "investigraph_etl_spark"
     assert "env" in out
+    # the master a Spark command would run, not a placeholder
+    assert out["master"] == f"local[{local_cores()}]"

@@ -47,7 +47,8 @@ def test_stream_replay_equals_oracle(spark, tmp_path, lake):
     # the merge's compaction count and phase timings ride along
     assert all(
         isinstance(l["compacted_buckets"], int)
-        and set(l["timings"]) == {"plan_sec", "write_sec", "compact_sec"}
+        and set(l["timings"])
+        == {"plan_sec", "write_sec", "stats_sec", "compact_sec", "manifest_sec"}
         for l in lines
     )
 

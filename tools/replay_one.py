@@ -63,10 +63,9 @@ def main() -> None:
     # table bucket count.  The executor-scaling experiment sets this to
     # 32/K per slice: a K-executor cluster keeps ONE 32-bucket table
     # and each executor owns the bucket subset its keys hash into, so
-    # the K slice lakes together have exactly the baseline's layout
-    # (and the write fan per executor shrinks with the cluster, as it
-    # does for real — 128 write tasks for a quarter-size slice was a
-    # measured ~2.6s fixed floor that no cluster would pay).
+    # the K slice lakes together have exactly the baseline's layout.
+    # The write fan follows each slice by itself: the lake writes
+    # 4 × min(buckets, cores) tasks (HashLakeTable._fan).
     num_buckets = int(os.environ.get("SPARK_GRAFT_NUM_BUCKETS", "32"))
     spark = get_spark(
         f"replay{cores}",
