@@ -30,10 +30,14 @@ Phase order: headline queries FIRST (no synthetic-log generation
 needed, so the driver's primary metric reaches a parseable line in
 minutes at any host speed) → log generation → scaling pair (the
 north-rule number) → incremental ingest → streaming tailer; the
-derived-maintenance and process-isolation studies are opt-in
-(SPARK_GRAFT_BENCH_DERIVED=1 / SPARK_GRAFT_BENCH_ISOLATION=1) since
-round 4 — they are diagnostics, not gate numbers, and their
-unconditional cost contributed to the round-3 driver timeout.
+derived-maintenance phase is opt-in (SPARK_GRAFT_BENCH_DERIVED=1) —
+a diagnostic, not a gate number.  The incremental and streaming phases
+run the policy ``run.py tail`` ships (``lake.merge`` defaults).
+
+Every JVM is sized to this host: ``local[$SPARK_GRAFT_CPUS]``
+(default: the process's CPU affinity) and one driver heap of half the
+host's memory (``session.local_heap``), also handed to each replay
+subprocess.
 """
 
 from __future__ import annotations
@@ -48,6 +52,8 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+from investigraph_etl_spark.session import local_cores, local_heap  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -156,7 +162,7 @@ def run_headline(sf_dir: str, cores: int) -> tuple[dict[str, float], dict[str, f
         "bench_headline",
         master=f"local[{cores}]",
         shuffle_partitions=cores,
-        extra_conf={"spark.driver.memory": "48g"},
+        extra_conf={"spark.driver.memory": local_heap()},
     )
     spark.range(10_000).selectExpr("sum(id)").collect()  # JVM/codegen warmup
     qs = entrymod.queries()
@@ -192,30 +198,6 @@ def gen_changelog(path: str, n_events: int = N_EVENTS) -> None:
     )
 
 
-def _replay_cmd(
-    cores: int,
-    log_dir: str,
-    work: str,
-    reps: int,
-    batches: int = 1,
-    slice_mod: int = 1,
-    slice_idx: int = 0,
-    n_events: int = N_EVENTS,
-):
-    return [
-        sys.executable,
-        os.path.join(REPO, "tools", "replay_one.py"),
-        str(cores),
-        log_dir,
-        work,
-        str(n_events),
-        str(reps),
-        str(batches),
-        str(slice_mod),
-        str(slice_idx),
-    ]
-
-
 def _parse_json_line(stdout: str) -> dict:
     line = [l for l in stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
@@ -231,168 +213,22 @@ def run_replay(
     n_events: int = N_EVENTS,
 ) -> dict:
     out = subprocess.run(
-        _replay_cmd(cores, log_dir, work, reps, batches, n_events=n_events),
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "replay_one.py"),
+            str(cores),
+            log_dir,
+            work,
+            str(n_events),
+            str(reps),
+            str(batches),
+        ],
         capture_output=True,
         text=True,
         timeout=2400,
-        env=env,
+        env={**(env or os.environ), "SPARK_GRAFT_DRIVER_MEM": local_heap()},
     )
     return _parse_json_line(out.stdout)
-
-
-def split_changelog_by_key(log_dir: str, out_base: str, k: int) -> list[str]:
-    """Pre-split the changelog into ``k`` disjoint key slices
-    (``doc_num % k``), one directory per slice — the input layout a
-    K-executor cluster actually sees: binlog/CDC streams are
-    key-partitioned at the source (Kafka partitions, Debezium routing),
-    so each executor tails only its own partition set.  Untimed setup;
-    chunk files keep their names so per-slice replays preserve the
-    sequential-commit grouping."""
-    import pathlib
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    outs = [pathlib.Path(out_base) / f"slice_{i}" for i in range(k)]
-    for o in outs:
-        o.mkdir(parents=True, exist_ok=True)
-    for f in sorted(pathlib.Path(log_dir).glob("*.parquet")):
-        t = pq.read_table(f)
-        doc_num = pc.cast(
-            pc.utf8_slice_codeunits(t.column("doc_id"), 4, 32), pa.int64()
-        )
-        sl = pc.subtract(doc_num, pc.multiply(pc.divide(doc_num, k), k))
-        for i in range(k):
-            pq.write_table(
-                t.filter(pc.equal(sl, i)), str(outs[i] / f.name),
-                compression="zstd",
-            )
-    return [str(o) for o in outs]
-
-
-def run_executor_scaling(log_dir: str, work: str) -> dict:
-    """Opt-in study (SPARK_GRAFT_EXEC_SCALING=1): the same replay job
-    at two simulated CLUSTER sizes — 1 vs 4 separate fixed-size JVM
-    processes (own GC, allocator, JIT, memory arena: what a cluster
-    executor actually is).  NOT the default north-rule evidence: on
-    one sandbox host, 4 concurrent JVMs share a single memory bus,
-    disk, and page cache that real executors each bring their own of —
-    measured collapse to ~0.1 "efficiency" at 8M events is host
-    saturation, not an engine property.  Kept as an honest negative
-    study; the thread pair is the prescribed sandbox proxy.
-
-    The work is key-partitioned exactly as a K-executor cluster
-    partitions a CDC stream: the changelog is pre-split by doc key
-    into K slice directories (untimed — binlog streams arrive
-    key-partitioned in production) and executor i merges only slice i
-    into its own bucket set; the K slices together equal one full
-    replay.  Per-commit fixed costs (lake create, manifest commit,
-    final compaction wait) do NOT shrink with slice size, biasing the
-    result AGAINST scaling — the published efficiency is conservative.
-
-    efficiency = T(1 executor) / (K × T(K executors)), where T(K) is
-    the completion time of the SLOWEST slice (job completion).  Rounds
-    interleave the two sizes; min over rounds per side; rep counts
-    fixed a priori.
-    """
-    C = int(os.environ.get("SPARK_GRAFT_EXEC_THREADS", "4"))
-    K = 4
-    EXEC_REPS = int(os.environ.get("SPARK_GRAFT_EXEC_REPS", "2"))
-    rounds = int(os.environ.get("SPARK_GRAFT_EXEC_ROUNDS", "2"))
-    slice_dirs = split_changelog_by_key(log_dir, f"{work}/slices", K)
-    # every executor — in BOTH cluster sizes — gets the same fixed
-    # resource box (C threads, this heap): cluster scaling means more
-    # executors, not bigger ones
-    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "12g"}
-    t1s: list[float] = []
-    tks: list[list[float]] = []
-    for r in range(rounds):
-        base = subprocess.run(
-            _replay_cmd(C, log_dir, f"{work}/ex1_{r}", EXEC_REPS),
-            capture_output=True, text=True, timeout=2400, env=env,
-        )
-        t1s.append(min(_parse_json_line(base.stdout)["times"]))
-        # start-line barrier: peers signal ready post-warmup, then all
-        # timed regions begin together (see tools/replay_one.py)
-        bdir = f"{work}/barrier_{r}"
-        os.makedirs(bdir, exist_ok=True)
-        procs = [
-            subprocess.Popen(
-                _replay_cmd(
-                    C, slice_dirs[i], f"{work}/exk_{r}_{i}", EXEC_REPS,
-                    slice_mod=1, slice_idx=i,
-                ),
-                stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL,
-                text=True,
-                # one shared table layout across cluster sizes: each of
-                # the K executors owns 32/K of the baseline's 32 buckets
-                env={
-                    **env,
-                    "SPARK_GRAFT_BARRIER": bdir,
-                    "SPARK_GRAFT_NUM_BUCKETS": str(32 // K),
-                },
-            )
-            for i in range(K)
-        ]
-        deadline = time.monotonic() + 600
-        while (
-            sum(os.path.exists(f"{bdir}/ready_{i}") for i in range(K)) < K
-            and time.monotonic() < deadline
-        ):
-            time.sleep(0.1)
-        open(f"{bdir}/go", "w").close()
-        results = [_parse_json_line(p.communicate(timeout=2400)[0]) for p in procs]
-        tks.append([min(res["times"]) for res in results])
-    t1 = min(t1s)
-    tk = min(max(slice_times) for slice_times in tks)
-    eff = round(t1 / (K * tk), 3)
-    return {
-        "executor_threads": C,
-        "executors_lo": 1,
-        "executors_hi": K,
-        "t_one_executor_sec": t1,
-        "t_four_executors_sec": tk,
-        "one_executor_samples": t1s,
-        "four_executor_samples": tks,
-        "throughput_one_executor": round(N_EVENTS / t1, 1),
-        "throughput_four_executors": round(N_EVENTS / tk, 1),
-        "speedup": round(t1 / tk, 2),
-        "efficiency": eff,
-    }
-
-
-def run_isolation_experiment(log_dir: str, work: str) -> dict:
-    """Substantiate the 'thread scaling ≠ executor scaling' claim with
-    data (round-1 VERDICT item 9): the same replay on (a) ONE 8-thread
-    process and (b) TWO CONCURRENT 4-thread processes (same total
-    cores, separate JVMs — the single-host proxy for two executors).
-    If per-process memory bandwidth / allocator contention is what
-    flattens thread scaling, (b) sustains higher aggregate throughput."""
-    one8 = run_replay(8, log_dir, f"{work}/iso8", 2)
-    procs = [
-        subprocess.Popen(
-            _replay_cmd(4, log_dir, f"{work}/iso4_{i}", 2),
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-        )
-        for i in range(2)
-    ]
-    t0 = time.monotonic()
-    results = [_parse_json_line(p.communicate(timeout=2400)[0]) for p in procs]
-    wall = round(time.monotonic() - t0, 2)
-    # each process replays the full log; aggregate rate uses each
-    # process's own best rep (min — same estimator as everywhere else)
-    agg = round(sum(N_EVENTS / r["seconds"] for r in results), 1)
-    return {
-        "one_process_8_threads_events_per_sec": one8["events_per_sec"],
-        "two_processes_4_threads_each_events_per_sec": agg,
-        "per_process": [r["times"] for r in results],
-        "wall_seconds_both": wall,
-        "ratio_2x4_over_1x8": round(agg / one8["events_per_sec"], 2),
-    }
 
 
 def write_bench_md(result: dict) -> None:
@@ -400,9 +236,7 @@ def write_bench_md(result: dict) -> None:
     lo, hi = cdc["runs"][0], cdc["runs"][1]
     inc = cdc["incremental"]
     dm = cdc.get("derived_maintenance")
-    iso = cdc.get("isolation")
     st = cdc["streaming_tailer"]
-    ex = cdc.get("executor_scaling")
     n_lo, n_hi = len(lo["times"]), len(hi["times"])
     lines = [
         "# BENCH — measured numbers (refreshed by bench.py)",
@@ -456,8 +290,8 @@ def write_bench_md(result: dict) -> None:
         "most headroom against co-tenant hypervisor steal.  Threads in",
         "one JVM share GC/allocator/memory bus, which if anything",
         "UNDER-states per-executor scaling on a real cluster where each",
-        "executor brings its own memory bandwidth (the process-isolation",
-        "data below tests that claim rather than assuming it).",
+        "executor brings its own memory bandwidth.  The retired",
+        "separate-JVM studies of that claim are recorded in BASELINE.md.",
         "",
         "| parallelism | seconds (min of reps) | all reps | events/sec |",
         "|---|---|---|---|",
@@ -505,70 +339,20 @@ def write_bench_md(result: dict) -> None:
         " durably recorded in BASELINE.md, which this file's"
         " regeneration never touches.",
         "",
-    ]
-    if ex:
-        lines += [
-            "## Separate-JVM executor study (opt-in, SPARK_GRAFT_EXEC_SCALING=1)",
-            "",
-            "The same replay at two simulated CLUSTER sizes: 1 vs",
-            f"{ex['executors_hi']} fixed-size local[{ex['executor_threads']}] JVM processes, the",
-            "changelog pre-split by doc key into per-executor slice",
-            "directories (how a key-partitioned CDC stream arrives:",
-            "Kafka partitions / Debezium routing), T(K) = slowest slice.",
-            "CAVEAT — on ONE sandbox host, K concurrent JVMs share a",
-            "single memory bus, disk, and page cache that real cluster",
-            "executors each bring their own of, so this UNDER-states",
-            "real executor scaling and degrades with K; it is a study of",
-            "that artifact, not the north-rule evidence.",
-            "",
-            "| cluster | seconds | events/sec | samples |",
-            "|---|---|---|---|",
-            f"| 1 executor × local[{ex['executor_threads']}] | {ex['t_one_executor_sec']} | "
-            f"{ex['throughput_one_executor']:,} | {ex['one_executor_samples']} |",
-            f"| {ex['executors_hi']} executors × local[{ex['executor_threads']}] | "
-            f"{ex['t_four_executors_sec']} | {ex['throughput_four_executors']:,} | "
-            f"{ex['four_executor_samples']} (per-slice) |",
-            "",
-            f"speedup 1→{ex['executors_hi']} executors: {ex['speedup']}× · "
-            f"single-host efficiency: {ex['efficiency']}"
-            + ("  — re-run once under the >1.05 validity rule" if ex.get("remeasured") else ""),
-            "",
-        ]
-    if iso:
-        lines += [
-            "## Process-isolation experiment (threads vs processes)",
-            "",
-            "Opt-in (SPARK_GRAFT_BENCH_ISOLATION=1).  Same replay, same",
-            "total core budget: ONE 8-thread JVM vs TWO concurrent",
-            "4-thread JVMs, each replaying the full log",
-            "(aggregate-replica throughput — the controlled",
-            "threads-vs-processes comparison backing the claim that",
-            "same-JVM thread scaling is a lower bound on executor scaling):",
-            "",
-            f"- 1 × local[8]: {iso['one_process_8_threads_events_per_sec']:,} events/s",
-            f"- 2 × local[4] concurrent: {iso['two_processes_4_threads_each_events_per_sec']:,} "
-            "events/s aggregate",
-            f"- ratio (2×4)/(1×8): **{iso['ratio_2x4_over_1x8']}**",
-            "",
-        ]
-    lines += [
         "## Sustained incremental ingest (merge-on-read)",
         "",
         f"The same {N_EVENTS:,}-event log applied as {inc['batches']} sequential",
         f"merge commits into one lake at local[{inc['cores']}] — the binlog-tail",
-        "shape the north rule describes.  Fast policy (measured, see",
-        "sources/lake.py): the in-batch LWW reduce is SKIPPED (read-time",
-        "LWW subsumes it; the winners agg costs more than the duplicate",
-        "bytes it saves on low-dup micro-batches), deltas append with",
-        "bytes ∝ batch, and threshold compaction folds on a background",
-        "thread overlapped with later commits' write jobs (harvested",
-        "into a subsequent manifest).  Compaction rewrites are",
-        "key-sorted per bucket with footer-harvested per-file [min,max]",
-        "key stats in the manifests (round 3) — point lookups file-skip",
-        "within their bucket (asserted in tests/test_lake_merge.py).",
-        "The round-1 copy-on-write design",
-        "rewrote touched buckets every commit; round-2 sync merge-on-read",
-        "measured 139k ev/s on this same input.",
+        "shape the north rule describes, under the policy `run.py tail`",
+        "ships (`lake.merge` defaults): each commit LWW-reduces its",
+        "batch, appends deltas with bytes ∝ batch, and folds buckets",
+        "at the delta threshold inline before it returns.  Compaction",
+        "rewrites are key-sorted per bucket with footer-harvested",
+        "per-file [min,max] key stats in the manifests (round 3) — point",
+        "lookups file-skip within their bucket (asserted in",
+        "tests/test_lake_merge.py).",
+        "The round-1 copy-on-write design rewrote touched buckets every",
+        "commit.",
         "",
         f"- total: {inc['seconds']}s (reps: {inc['times']}) → "
         f"{inc['events_per_sec']:,} events/s sustained across "
@@ -591,7 +375,7 @@ def write_bench_md(result: dict) -> None:
         "REQUESTED columns only — never the token arrays.  Measured",
         "on the way here: unprojected refreshes grew 2.2→7.7s across",
         "16 uniform-key commits (from-state payload scan tracked",
-        "table size) and spiked 2-3× after every async fold (the",
+        "table size) and spiked 2-3× after every fold (the",
         "_commit row filter scanned compacted bases); with both fixes",
         "the series is flat within host noise — per-job floor plus",
         "the narrow from-state row count, no trend and no spikes:",
@@ -607,10 +391,10 @@ def write_bench_md(result: dict) -> None:
         "",
         "The same log drained by the actual Structured Streaming",
         "tailer — file source with maxFilesPerTrigger sized to the",
-        "same commit count, checkpointed foreachBatch merge,",
-        "availableNow trigger, async compaction landed before the",
-        "clock stops.  Includes the streaming-engine overhead the",
-        "direct merge loop above does not pay (offset tracking,",
+        "same commit count, checkpointed foreachBatch merge with the",
+        "same shipped policy, availableNow trigger.  Includes the",
+        "streaming-engine overhead the direct merge loop above does",
+        "not pay (offset tracking,",
         "per-batch planning, stream commit log) — the gap between the",
         "two numbers IS that overhead:",
         "",
@@ -739,7 +523,7 @@ def measure_scaling_pair(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = local_cores()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
@@ -941,31 +725,6 @@ def main() -> None:
         )
         emit("derived_maintenance")
 
-    # opt-in study (SPARK_GRAFT_EXEC_SCALING=1): 1 vs 4 separate
-    # fixed-size JVMs over a key-pre-split log.  Not the default
-    # north-rule measurement: on ONE sandbox host, 4 concurrent JVMs
-    # share a single memory bus / disk / page cache that real cluster
-    # executors each bring their own of — measured collapse to ~0.1
-    # "efficiency" at 8M events is host-resource saturation, not an
-    # engine property.  The prescribed sandbox evidence for the north
-    # rule is the thread pair above.
-    ex = None
-    if os.environ.get("SPARK_GRAFT_EXEC_SCALING"):
-        ex = run_executor_scaling(log_dir, work)
-        if ex["efficiency"] > 1.05:  # same pre-registered validity rule
-            ex = run_executor_scaling(log_dir, work)
-            ex["remeasured"] = True
-        emit("executor_scaling")
-
-    # OPT-IN (SPARK_GRAFT_BENCH_ISOLATION=1) since r4 — same budget
-    # rationale as the derived phase; the threads-vs-processes claim it
-    # backs is established in BENCH.md history and doesn't need
-    # re-measuring every gate run.
-    iso = None
-    if os.environ.get("SPARK_GRAFT_BENCH_ISOLATION"):
-        iso = run_isolation_experiment(log_dir, work)
-        emit("isolation")
-
     cdc = {
         "n_events": N_EVENTS,
         "pair_events": PAIR_EVENTS,
@@ -998,8 +757,6 @@ def main() -> None:
             "seconds": stream["seconds"],
             "events_per_sec": stream["events_per_sec"],
         },
-        **({"executor_scaling": ex} if ex else {}),
-        **({"isolation": iso} if iso else {}),
     }
     shutil.rmtree(work, ignore_errors=True)
 

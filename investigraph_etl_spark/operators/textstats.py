@@ -191,10 +191,12 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     O(n·distinct)/doc.
 
     Tokenization follows the simhash precedent for cross-engine
-    parity: ASCII ``\\s+`` splitting (Java ``\\s`` ≡ RE2 ≡ the pinned
-    Python class) so the DuckDB oracle reproduces token boundaries
-    exactly; lowercasing is ASCII-equivalent across Python/JVM/DuckDB
-    on the value-checked corpora.  The keep rule evaluates the ROUNDED
+    parity: ASCII ``\\s+`` splitting, where Java ``\\s`` ≡ the pinned
+    Python class ``[ \\t\\n\\x0b\\f\\r]``.  RE2's ``\\s`` (the DuckDB
+    oracle) omits U+000B, so the oracle reproduces token boundaries
+    exactly only on text without vertical tabs (the value-checked
+    corpora have none); lowercasing is ASCII-equivalent across
+    Python/JVM/DuckDB on the value-checked corpora.  The keep rule evaluates the ROUNDED
     ratios so the flag is reproducible bit-for-bit across engines (the
     oracle runs the same rule in SQL; values and schema are identical
     to the explode shape — pinned by the driver gate and

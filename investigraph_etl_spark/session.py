@@ -64,6 +64,16 @@ def local_cores(env: Mapping[str, str] = os.environ) -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+def local_heap(meminfo: str = "/proc/meminfo") -> str:
+    """A JVM heap size for a single-process benchmark on this host:
+    half of ``MemTotal``, at least 1 GiB (e.g. ``"8035m"`` on 16 GB)."""
+    with open(meminfo) as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return f"{max(1024, int(line.split()[1]) // 2048)}m"
+    raise ValueError(f"MemTotal missing from {meminfo}")
+
+
 def resolve_master(master: str | None, cores: int) -> tuple[str, int]:
     """``(master, partitions)`` for a session on ``cores`` cores.
 

@@ -44,6 +44,11 @@ batch) was the top 100 TB killer flagged in VERDICT.md):
   per-commit metadata bytes ∝ touched buckets — never total file
   count (round-2's flat JSON was the 10^10-event metadata bottleneck).
 
+A commit is one synchronous sequence on the calling thread: plan →
+delta write → footer stats → compaction fold of threshold buckets →
+manifest + pointer swap.  Nothing runs in the background, so a fold
+always replaces its buckets' base and every delta set.
+
 Single-writer assumption: one committer at a time (Structured
 Streaming's ``foreachBatch`` is sequential per query).  Matches the
 reference's warning that parallel loads need a parallel-safe store
@@ -221,12 +226,6 @@ class HashLakeTable:
         # only buckets whose file lists changed get new bucket-manifest
         # files (the Iceberg manifest-reuse analog)
         self._persisted = self._manifest
-        # background-fold state (see _compact): _compact_future is None
-        # or (future, consumed) where consumed maps bucket -> number of
-        # delta sets the running fold snapshotted (its apply drops
-        # exactly that prefix per bucket)
-        self._compact_pool = None
-        self._compact_future = None
         # compaction rewrites sort each bucket by key and roll files at
         # this row count, giving the bucket a set of key-range-disjoint
         # base files whose footer min/max land in the bucket manifest —
@@ -906,7 +905,6 @@ class HashLakeTable:
         winners_strategy: str = "broadcast",
         auto_compact_deltas: int = 8,
         reduce_batch: bool = True,
-        compact_mode: str = "sync",
         schema_policy: str = "evolve",
     ) -> dict:
         """Apply one change batch (raw or pre-reduced — in-batch LWW
@@ -931,21 +929,9 @@ class HashLakeTable:
         correctness is unaffected because read/compact-time LWW over
         ``(_seq, _commit)`` subsumes it (``LWW(batch ∪ target) ≡
         LWW(LWW(batch) ∪ target)``); what changes is economics.  The
-        reduce is a winners hash-agg + broadcast semi-join that costs
-        ~0.8s per micro-batch at local[32] regardless of how few
-        duplicates it removes (measured; ``perfbench/run.py --trace 1``
-        breaks a commit into these phases), while unreduced deltas only
-        cost bytes ∝ the duplicate fraction.
-        Policy: skip for micro-batches (low in-batch dup ratio — the
-        streaming tailer's case), keep for bulk replays whose dup
-        ratio is high (events/doc ≫ 1) where the reduce pays for
-        itself in write volume.
-
-        ``compact_mode`` — ``"sync"`` folds threshold buckets inline on
-        the calling thread (bounded latency spike), ``"async"`` submits
-        the same fold (:meth:`_compact`) to a background thread so it
-        overlaps the next commits' write jobs (applied to the manifest
-        at a later commit).  Any other value raises ``ValueError``.
+        default reduces (the streaming tailer and batch replays run
+        it); callers whose batches already hold ≤1 row per key, such
+        as ``MinHashIndex`` feeding a change feed, skip it.
 
         Exactly-once: Structured Streaming batch ids are monotonic and a
         retried batch re-runs with the same id, so a batch with
@@ -956,15 +942,9 @@ class HashLakeTable:
         """
         import time as _time
 
-        if compact_mode not in ("sync", "async"):
-            raise ValueError(
-                f"compact_mode must be 'sync' or 'async', got {compact_mode!r}"
-            )
         if batch_id <= self.last_committed(stream_id):
             return {"skipped": True, "version": self.version}
         _t0 = _time.monotonic()
-        # fold any finished background compaction into this commit
-        self._harvest_compaction(block=False)
 
         # 1. schema gate + evolution (driver-side, before any job):
         #    additive columns promote, absent columns null-fill,
@@ -1128,19 +1108,8 @@ class HashLakeTable:
             key=lambda b: -len(deltas[str(b)]),
         )
         per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
-        compacted = 0
         _t_pre_compact = _time.monotonic()
-        if full:
-            if compact_mode == "sync":
-                # mode-switch guard: a still-inflight async fold
-                # snapshotted delta prefixes that a sync fold would also
-                # consume — land it first or its apply would drop the
-                # wrong delta sets
-                self._harvest_compaction(block=True)
-            compacted = self._compact(
-                full[:per_commit], out_version,
-                background=compact_mode == "async",
-            )
+        compacted = self._compact(full[:per_commit], out_version)
         _t_compact = _time.monotonic()
 
         self._commit_manifest()
@@ -1186,58 +1155,26 @@ class HashLakeTable:
         return 4 * min(n, self.spark.sparkContext.defaultParallelism)
 
     # ------------------------------------------------------- compaction
-    def _compact(
-        self, buckets: list[int], version: int, *, background: bool = False
-    ) -> int:
+    def _compact(self, buckets: list[int], version: int) -> int:
         """Fold ``buckets``' base ∪ deltas into new bases — the one
-        compaction path behind sync merges, async merges and
-        :meth:`compact`.  Returns the number of buckets folded
-        (inline) or scheduled (``background``).
+        compaction path behind :meth:`merge` and :meth:`compact`.
+        Returns the number of buckets folded.
 
-        Snapshots the bucket → files mapping NOW and runs :meth:`_fold`
-        over it.  Inline (sync merges, :meth:`compact`) the fold runs
-        on the calling thread, so the caller's job group and streaming
-        local properties still apply, and :meth:`_apply_fold` lands it
-        at once.  ``background=True`` submits the same fold to a
-        one-slot pool (the Iceberg maintenance-process analog) and
-        :meth:`_harvest_compaction` applies it at a later commit; a
-        busy pool skips scheduling — the buckets stay over threshold
-        and are retried next commit.
-
-        The snapshot stays valid while the fold runs: single-writer,
-        only compaction removes files from the manifest, and only one
-        compaction runs at a time.  Concurrent delta appends to the
-        same buckets are safe because the apply drops exactly the
-        per-bucket delta-set *prefix* the fold consumed, keeping
-        anything appended after the snapshot.  The caller persists the
-        manifest.
+        Runs :meth:`_fold` over the buckets' current files on the
+        calling thread, so the caller's job group and streaming local
+        properties apply, then :meth:`_apply_fold` swaps the new bases
+        in.  Nothing appends while the fold runs (single writer, one
+        synchronous commit), so a fold replaces its buckets' base and
+        all their deltas.  The caller persists the manifest.
 
         Crash safety: if the process dies mid-fold the manifest never
         references the new files; :meth:`vacuum` removes the orphans.
-        Do not run :meth:`vacuum` while a compaction is inflight (it
-        would delete the fold's not-yet-referenced output).
         """
-        if background and self._compact_future is not None:
-            return 0
         snapshot = {str(b): self._bucket_files([b]) for b in buckets}
         if not any(snapshot.values()):
             return 0
-        deltas = self._manifest.get("deltas", {})
-        consumed = {b: len(deltas.get(b, [])) for b in snapshot}
         out_dir = self.root / "data" / f"c{version:06d}x"
-        if not background:
-            return self._apply_fold(
-                *self._fold(snapshot, out_dir, self.schema), consumed
-            )
-        import concurrent.futures
-
-        if self._compact_pool is None:
-            self._compact_pool = concurrent.futures.ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="lake-compact"
-            )
-        fut = self._compact_pool.submit(self._fold, snapshot, out_dir, self.schema)
-        self._compact_future = (fut, consumed)
-        return len(snapshot)
+        return self._apply_fold(*self._fold(snapshot, out_dir, self.schema))
 
     def _fold(
         self, snapshot: dict[str, list[str]], out_dir: pathlib.Path,
@@ -1288,30 +1225,19 @@ class HashLakeTable:
         return new_base, new_stats
 
     def _apply_fold(
-        self,
-        new_base: dict[str, list[str]],
-        new_stats: dict[str, list],
-        consumed: dict[str, int],
+        self, new_base: dict[str, list[str]], new_stats: dict[str, list]
     ) -> int:
         """Swap a fold's new bases into the in-memory manifest: per
-        bucket, drop the old base and the ``consumed`` delta-set prefix
-        (with their stats) and keep any delta sets appended since the
-        snapshot.  Returns the number of buckets folded."""
+        bucket, drop the old base and every delta set (with their
+        stats).  Returns the number of buckets folded."""
         bases = dict(self._manifest["buckets"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
+        deltas = dict(self._manifest.get("deltas", {}))
         file_stats = dict(self._manifest.get("file_stats", {}))
         for b, files in new_base.items():
-            consumed_files = bases.get(b, []) + [
-                f for ds in deltas.get(b, [])[: consumed[b]] for f in ds
-            ]
-            for f in consumed_files:
+            folded = bases.get(b, []) + [f for ds in deltas.pop(b, []) for f in ds]
+            for f in folded:
                 file_stats.pop(f, None)
             bases[b] = files
-            remaining = deltas.get(b, [])[consumed[b]:]
-            if remaining:
-                deltas[b] = remaining
-            else:
-                deltas.pop(b, None)
         file_stats.update(new_stats)
         self._manifest = {
             **self._manifest,
@@ -1321,35 +1247,11 @@ class HashLakeTable:
         }
         return len(new_base)
 
-    def _harvest_compaction(self, *, block: bool) -> int:
-        """Apply a finished background fold (``block=True`` waits for an
-        inflight one).  Returns the number of buckets folded."""
-        if self._compact_future is None:
-            return 0
-        fut, consumed = self._compact_future
-        if not block and not fut.done():
-            return 0
-        new_base, new_stats = fut.result()  # re-raises background failures
-        self._compact_future = None
-        return self._apply_fold(new_base, new_stats, consumed)
-
-    def wait_for_compaction(self) -> int:
-        """Block until any inflight background compaction lands, fold
-        it in, and persist the manifest as a new version.  Call before
-        shutting down a ``compact_mode="async"`` writer."""
-        n = self._harvest_compaction(block=True)
-        if n:
-            self._manifest = {**self._manifest, "version": self.version + 1}
-            self._commit_manifest()
-        return n
-
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Fold deltas into bases (Iceberg ``rewrite_data_files`` analog)
         as a new table version — the merge path's fold (:meth:`_compact`),
         run inline on the calling thread.  ``buckets`` defaults to every
         bucket that currently has deltas."""
-        # land any inflight async fold first — single-compactor rule
-        self._harvest_compaction(block=True)
         deltas = self._manifest.get("deltas", {})
         targets = (
             sorted(int(b) for b in deltas if deltas[b])
@@ -1381,10 +1283,6 @@ class HashLakeTable:
         resolved, so opening the table via a relative path / symlink
         spelling cannot orphan live files (round-2 fix).  Single-writer
         discipline: do not run concurrently with a pinned reader."""
-        # an inflight async fold's output is not yet referenced by any
-        # manifest and would be deleted as an orphan — land it AND
-        # persist it (vacuum reads manifests from disk) first
-        self.wait_for_compaction()
         mdir = self.root / "manifests"
         manifests = sorted(mdir.glob("v*.json"))
         expired = manifests[:-keep_manifests] if keep_manifests > 0 else []

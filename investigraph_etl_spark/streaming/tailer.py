@@ -7,10 +7,11 @@ docs/run/parallelization.md) with Structured Streaming:
     readStream(parquet, maxFilesPerTrigger)
       → foreachBatch( normalize → LWW dedup → lake.merge )
 
-Each merge appends one delta commit; buckets that reach the delta
-threshold are folded back into their bases by the lake's one
-compaction fold, inline or in the background (``compact_mode``).
-The per-batch metrics record carries the merge's ``compacted_buckets``
+Each merge is one synchronous commit: it appends one delta set per
+touched bucket, and buckets that reach the delta threshold are folded
+back into their bases inside the same commit, on the batch's thread.
+The batch is LWW-reduced in the merge before it is written.  The
+per-batch metrics record carries the merge's ``compacted_buckets``
 and phase ``timings``.
 
 Exactly-once = Structured Streaming checkpoint (at-least-once
@@ -122,8 +123,6 @@ def tail_changelog(
     salt_buckets: int = 0,
     metrics_path: str | None = None,
     available_now: bool = True,
-    reduce_batch: bool = True,
-    compact_mode: str = "sync",
     derived: list | None = None,
     stream: DataFrame | None = None,
     dead_letter_dir: str | None = None,
@@ -139,14 +138,10 @@ def tail_changelog(
 
     ``available_now=True`` drains everything currently in the directory
     and stops (the replay/bench mode); ``False`` keeps tailing.
-    ``reduce_batch`` / ``compact_mode`` forward to ``lake.merge`` —
-    for sustained micro-batch tailing, ``reduce_batch=False`` +
-    ``compact_mode="async"`` is the measured-fastest policy (the
-    in-batch LWW reduce costs more than the duplicate bytes it saves
-    on low-dup micro-batches).  Both modes run the lake's single
-    compaction fold: ``"sync"`` inside the batch's merge, ``"async"``
-    on a background thread overlapping the next batches' commits (see
-    ``HashLakeTable._compact``).  Defaults stay conservative.
+    Every batch runs ``lake.merge`` with its defaults: the in-batch
+    LWW reduce, then the delta write and, for buckets at the delta
+    threshold, the compaction fold (``HashLakeTable._compact``), all
+    inside the batch's commit.
     ``derived`` — change-feed consumers refreshed after every batch's
     merge: anything with ``refresh(lake)`` keyed to the lake version —
     ``DerivedAggTable`` materialized views (operators/incremental.py)
@@ -154,10 +149,6 @@ def tail_changelog(
     Each keeps its own lake-version pointer, so replayed batches are
     no-ops and a consumer that missed batches catches up over the
     widened feed.
-    With ``compact_mode="async"``, call ``lake.wait_for_compaction()``
-    after the query terminates to land any inflight fold (state is
-    correct either way; the unharvested output is merely orphaned and
-    vacuum-collected).
     The declared schema may be a superset of early files — parquet
     fills missing columns with null, and the lake promotes genuinely
     new columns on first sight (additive evolution, SURVEY.md T6).
@@ -204,13 +195,7 @@ def tail_changelog(
             F.max("event_time").alias("max_event_time"),
         )
         reduced = prepare_batch(observed)
-        result = lake.merge(
-            reduced,
-            batch_id,
-            salt_buckets=salt_buckets,
-            reduce_batch=reduce_batch,
-            compact_mode=compact_mode,
-        )
+        result = lake.merge(reduced, batch_id, salt_buckets=salt_buckets)
         # materialized views ride the same batch cadence; their own
         # version pointer makes a replayed batch a no-op and lets a
         # missed refresh catch up over the widened feed
@@ -237,8 +222,7 @@ def tail_changelog(
                 "lake_version": result.get("version"),
                 "skipped": result.get("skipped", False),
                 "touched_buckets": result.get("touched_buckets"),
-                # buckets folded (sync) or scheduled (async) by this
-                # merge, and its plan/write/compact phase seconds
+                # buckets folded by this merge, and its phase seconds
                 "compacted_buckets": result.get("compacted_buckets"),
                 "timings": result.get("timings"),
                 "wall_time": time.time(),

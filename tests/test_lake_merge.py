@@ -256,43 +256,38 @@ def test_vacuum_reclaims_superseded_files_preserves_state(spark, lake):
 
 
 def test_fast_policy_replay_equals_oracle(spark, lake):
-    """The sustained-ingest fast policy — reduce_batch=False (read-time
-    LWW subsumes the in-batch reduce) + compact_mode="async"
-    (background folding harvested at later commits) — must reach the
-    exact same final state as the default path.  auto_compact_deltas=2
-    forces several async folds to be scheduled AND harvested
-    mid-replay, exercising the snapshot/consumed-prefix bookkeeping
-    under concurrent delta appends to the same buckets."""
+    """Unreduced micro-batches — reduce_batch=False (read-time LWW
+    subsumes the in-batch reduce) — must reach the exact same final
+    state as the default path.  auto_compact_deltas=2 forces several
+    inline folds mid-replay, each replacing its buckets' base and all
+    their deltas while later commits keep appending to them."""
     events = gen_events_pandas(0, 3000, seed=11, n_docs=200, dirty_frac=0.1)
     for bid, start in enumerate(range(0, 3000, 300)):
         chunk = events.iloc[start : start + 300]
         lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
+            reduce_batch=False, auto_compact_deltas=2,
         )
-    lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # reopening from disk (fresh reader) sees the identical state —
-    # every harvested fold was persisted by a later manifest write or
-    # by wait_for_compaction's own version bump
+    # every fold was persisted by its own commit's manifest write
     reopened = HashLakeTable(spark, lake.root)
     assert_pdf_equal(reopened.read().toPandas(), oracle_reduce(events))
 
 
-@pytest.mark.parametrize("entry", ["sync", "async", "compact"])
+@pytest.mark.parametrize("entry", ["sync", "compact"])
 def test_unreduced_deltas_fold_at_compaction(spark, lake, entry):
     """reduce_batch=False writes duplicate key rows into one commit's
-    delta; read() must still LWW them away, and every fold entry point
-    — a sync merge at the delta threshold, an async merge +
-    wait_for_compaction(), and compact() — must fold them into bases
-    holding ≤1 row per key, each in the bucket its key hashes to."""
+    delta; read() must still LWW them away, and both fold entry points
+    — a merge at the delta threshold and compact() — must fold them
+    into bases holding ≤1 row per key, each in the bucket its key
+    hashes to."""
     from pyspark.sql import functions as F
 
     events = gen_events_pandas(0, 1200, seed=12, n_docs=40)  # heavy dups
     r = lake.merge(
         prepare_batch(_spark_events(spark, events)), 0,
         reduce_batch=False,
-        compact_mode="async" if entry == "async" else "sync",
         # threshold 1 folds every touched bucket in this commit; the
         # default threshold leaves the fold to compact()
         auto_compact_deltas=8 if entry == "compact" else 1,
@@ -303,8 +298,6 @@ def test_unreduced_deltas_fold_at_compaction(spark, lake, entry):
         assert lake.compact()["compacted_buckets"] > 0
     else:
         assert r["compacted_buckets"] > 0
-    if entry == "async":
-        assert lake.wait_for_compaction() > 0
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # scan the manifest's base files directly (read_raw() is itself
     # LWW-reduced, so it cannot show a duplicate left in a base)
@@ -330,56 +323,6 @@ def test_unreduced_deltas_fold_at_compaction(spark, lake, entry):
     assert (rows["bucket"] == rows["hashed"]).all()
     # one row per key ever written, tombstones included
     assert set(rows[lake.key]) == set(events["doc_id"])
-
-
-def test_merge_rejects_unknown_compact_mode(spark, lake):
-    """A misspelt compact_mode must fail loudly before any Spark job,
-    not silently disable compaction."""
-    batch = prepare_batch(
-        _spark_events(spark, gen_events_pandas(0, 10, seed=1, n_docs=5))
-    )
-    for mode in ("asnyc", "off"):
-        with pytest.raises(ValueError, match="compact_mode"):
-            lake.merge(batch, 0, compact_mode=mode)
-    assert lake.version == 0
-
-
-def test_sync_compact_lands_inflight_async_fold_first(spark, lake):
-    """Mode-switch safety: an inflight async fold's consumed-prefix
-    bookkeeping must be applied before any sync fold touches the same
-    buckets — otherwise the harvest would drop the wrong delta sets."""
-    events = gen_events_pandas(0, 2000, seed=21, n_docs=120, dirty_frac=0.1)
-    chunks = [events.iloc[i : i + 250] for i in range(0, 2000, 250)]
-    for bid, chunk in enumerate(chunks[:-1]):
-        lake.merge(
-            prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
-        )
-    # switch to sync for the last commit while a fold may be inflight
-    lake.merge(
-        prepare_batch(_spark_events(spark, chunks[-1])), len(chunks) - 1,
-        reduce_batch=False, compact_mode="sync", auto_compact_deltas=2,
-    )
-    lake.wait_for_compaction()
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-
-
-def test_vacuum_lands_inflight_fold_before_collecting(spark, lake):
-    """vacuum() must persist an inflight async fold before orphan
-    collection, or it would delete the fold's not-yet-referenced
-    output files."""
-    events = gen_events_pandas(0, 1500, seed=22, n_docs=100)
-    chunks = [events.iloc[i : i + 300] for i in range(0, 1500, 300)]
-    for bid, chunk in enumerate(chunks):
-        lake.merge(
-            prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
-        )
-    lake.vacuum(keep_manifests=1)
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-    # reopening from disk agrees — the fold was persisted, not orphaned
-    reopened = HashLakeTable(spark, lake.root)
-    assert_pdf_equal(reopened.read().toPandas(), oracle_reduce(events))
 
 
 def test_read_keys_prunes_to_key_buckets(spark, lake):
@@ -585,7 +528,7 @@ def test_file_stats_survive_manifest_roundtrip(spark, lake):
 
 def test_file_skipping_with_tombstones_and_async_compaction(spark, lake):
     """Skipping is sound under the full LWW surface: tombstoned keys
-    stay dead, late events stay lost, and the async-compaction harvest
+    stay dead, late events stay lost, and every mid-replay fold
     carries the new bases' stats (old files' stats dropped)."""
     lake.compact_target_file_rows = 4
     events = gen_events_pandas(0, 2500, seed=33, n_docs=180, dirty_frac=0.1)
@@ -595,9 +538,7 @@ def test_file_skipping_with_tombstones_and_async_compaction(spark, lake):
             prepare_batch(_spark_events(spark, chunk)),
             bid,
             auto_compact_deltas=2,
-            compact_mode="async",
         )
-    lake.wait_for_compaction()
     oracle = oracle_reduce(events)
     all_ids = {f"doc-{n:08d}" for n in range(180)}
     dead = sorted(all_ids - set(oracle["doc_id"]))[:2]
@@ -702,21 +643,19 @@ def test_iceberg_requires_configured_runtime(spark):
         IcebergLakeTable(spark, "cat.db.docs")
 
 
-# -------------------- async-compaction concurrency property (task 6)
+# -------------------- compaction interleaving property
 
 
 @pytest.mark.parametrize("seed", range(20))
 def test_async_compaction_interleaved_reads_lww_equivalent(
     spark, tmp_path, seed
 ):
-    """Randomized (seeded) multi-commit ingest with compact_mode drawn
-    per commit from {sync, async}: background folds overlap subsequent
-    commits (lake.py merge → _harvest_compaction), a sync commit lands
-    any inflight fold before its own, and a read issued at ANY point —
-    including while a fold is in flight — must see the exact LWW
-    survivor set of the commits applied so far.  Also time-travels
-    back to every recorded version at the end: compaction commits must
-    not have changed any snapshot's rows."""
+    """Randomized (seeded) multi-commit ingest with the delta threshold
+    and base file size drawn per run and commit, so inline folds land
+    at varying points of the replay: a read issued after ANY commit
+    must see the exact LWW survivor set of the commits applied so far.
+    Also time-travels back to every recorded version at the end:
+    compaction commits must not have changed any snapshot's rows."""
     import random
 
     rng = random.Random(seed)
@@ -737,17 +676,13 @@ def test_async_compaction_interleaved_reads_lww_equivalent(
             prepare_batch(_spark_events(spark, part)),
             bid,
             auto_compact_deltas=rng.choice([1, 2]),
-            compact_mode=rng.choice(["sync", "async"]),
         )
         snapshots.append((lake.version, (bid + 1) * chunk))
-        # mid-flight read: the async fold from THIS commit may still be
-        # running — the read must already be LWW-exact
         if rng.random() < 0.7:
             assert_pdf_equal(
                 lake.read().toPandas(),
                 oracle_reduce(events.iloc[: (bid + 1) * chunk]),
             )
-    lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # every recorded snapshot still reads to its own prefix's LWW state
     for version, end in snapshots:

@@ -5,13 +5,26 @@ from __future__ import annotations
 
 import os
 
-from investigraph_etl_spark.session import local_cores, resolve_master
+import pytest
+
+from investigraph_etl_spark.session import local_cores, local_heap, resolve_master
 
 
 def test_local_cores_env_then_affinity():
     assert local_cores({"SPARK_GRAFT_CPUS": "3"}) == 3
     assert local_cores({}) == len(os.sched_getaffinity(0))
     assert local_cores({"SPARK_GRAFT_CPUS": ""}) == len(os.sched_getaffinity(0))
+
+
+def test_local_heap_is_half_of_memtotal(tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16456384 kB\nMemFree:  1 kB\n")
+    assert local_heap(str(meminfo)) == "8035m"
+    meminfo.write_text("MemTotal:       1048576 kB\n")
+    assert local_heap(str(meminfo)) == "1024m"
+    meminfo.write_text("MemFree:  1 kB\n")
+    with pytest.raises(ValueError, match="MemTotal"):
+        local_heap(str(meminfo))
 
 
 def test_resolve_master_partitions_follow_master():

@@ -165,6 +165,7 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
     Python Counter oracle computing the same rounded ratios and keep
     rule.  One Spark job for all cases."""
     import random
+    import re
     from collections import Counter
 
     from investigraph_etl_spark.operators.textstats import repetition_stats
@@ -176,6 +177,8 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
         "word",           # singleton, no bigrams
         "A a\ta",          # case-fold + tab whitespace
         "x Y x y X y",    # interleaved
+        "a\u00a0b a",     # NBSP is not a boundary: 2 words, not 3
+        "a\x0bb a",       # vertical tab is a boundary (the pinned class)
     ]
     for _ in range(200):
         n = rng.randint(0, 40)
@@ -189,8 +192,11 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
     )
     got = {r["doc_id"]: r.asDict() for r in repetition_stats(df).collect()}
 
+    # the pinned ASCII whitespace class _rep splits on; str.split()
+    # would also split Unicode whitespace such as NBSP
+    boundary = re.compile(r"[ \t\n\x0b\f\r]+")
     for i, t in enumerate(texts):
-        ws = t.lower().split()
+        ws = [w for w in boundary.split(t.lower()) if w]
         if not ws:
             assert i not in got, (i, t)
             continue

@@ -2,16 +2,8 @@
 fresh process (fresh JVM — JIT state cannot leak between core counts).
 
 Usage: python tools/replay_one.py <cores> <log_dir> <work_dir> <n_events> \
-           [reps] [batches] [slice_mod] [slice_idx]
+           [reps] [batches]
 
-``slice_mod`` > 1 restricts the replay to the doc_id hash slice
-``pmod(xxhash64(doc_id), slice_mod) == slice_idx`` — one "executor"'s
-key range carved from a shared full log (each process then pays a
-full-log scan).  bench.py's executor-scaling experiment instead
-PRE-SPLITS the changelog into per-slice directories (how a
-key-partitioned CDC stream actually arrives) and passes slice_mod=1
-with the slice's own log_dir; ``slice_idx`` then only names this
-process's barrier-ready file.
 Prints one JSON line with all rep times and the min (the sandbox host
 shows multi-second scheduling stalls at random moments — min-of-N is
 the sustained-capability estimate; all samples are reported).
@@ -19,6 +11,10 @@ the sustained-capability estimate; all samples are reported).
 ``batches`` > 1 replays the log as that many sequential merge commits
 into ONE lake (the sustained incremental-ingest shape; exercises the
 merge-on-read delta path + auto-compaction) instead of one bulk merge.
+Every merge runs with ``lake.merge``'s defaults — the policy
+``run.py tail`` ships: in-batch LWW reduce, and threshold buckets
+folded inside the commit.  ``SPARK_GRAFT_REPLAY_MODE=stream`` drains
+the log through ``tail_changelog`` instead of direct merge calls.
 
 A warmup replay (100k events) runs first so JIT compilation does not
 contaminate rep 1.
@@ -28,14 +24,16 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the engine of this script's own checkout
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from investigraph_etl_spark.changelog import write_changelog  # noqa: E402
-from investigraph_etl_spark.session import get_spark  # noqa: E402
+from investigraph_etl_spark.session import get_spark, local_heap  # noqa: E402
 from investigraph_etl_spark.sources.lake import HashLakeTable  # noqa: E402
 from investigraph_etl_spark.streaming.tailer import (  # noqa: E402
     change_schema,
@@ -53,20 +51,9 @@ def main() -> None:
     )
     reps = int(sys.argv[5]) if len(sys.argv) > 5 else 3
     batches = int(sys.argv[6]) if len(sys.argv) > 6 else 1
-    slice_mod = int(sys.argv[7]) if len(sys.argv) > 7 else 1
-    slice_idx = int(sys.argv[8]) if len(sys.argv) > 8 else 0
-    # fixed-size "executor" semantics: heap and GC threads bounded by
-    # THIS process's share, never the host (4 concurrent JVMs each
-    # sizing ParallelGC for 32 cores + a 48g heap thrash and swap —
-    # measured 12x degradation in the executor-scaling experiment)
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # table bucket count.  The executor-scaling experiment sets this to
-    # 32/K per slice: a K-executor cluster keeps ONE 32-bucket table
-    # and each executor owns the bucket subset its keys hash into, so
-    # the K slice lakes together have exactly the baseline's layout.
-    # The write fan follows each slice by itself: the lake writes
-    # 4 × min(buckets, cores) tasks (HashLakeTable._fan).
-    num_buckets = int(os.environ.get("SPARK_GRAFT_NUM_BUCKETS", "32"))
+    # GC threads bounded by this process's cores, heap by the host's
+    # memory (bench.py passes its own heap value down)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or local_heap()
     spark = get_spark(
         f"replay{cores}",
         master=f"local[{cores}]",
@@ -85,12 +72,10 @@ def main() -> None:
     write_changelog(warm_log, 100_000, chunk_size=25_000, seed=7, n_docs=10_000)
     warm_dir = f"{work}/warm_lake_{cores}"
     shutil.rmtree(warm_dir, ignore_errors=True)
-    warm_lake = HashLakeTable.create(spark, warm_dir, target_schema(), num_buckets=num_buckets)
+    warm_lake = HashLakeTable.create(spark, warm_dir, target_schema())
     warm_lake.merge(
         prepare_batch(spark.read.schema(change_schema()).parquet(warm_log)), 0
     )
-
-    import pathlib
 
     chunk_files = sorted(str(p) for p in pathlib.Path(log_dir).glob("*.parquet"))
     groups: list[list[str]]
@@ -99,20 +84,6 @@ def main() -> None:
     else:
         per = (len(chunk_files) + batches - 1) // batches
         groups = [chunk_files[i : i + per] for i in range(0, len(chunk_files), per)]
-
-    # start-line barrier for concurrent-executor experiments: without
-    # it, an early-starting process times its replay while its peers
-    # are still in JVM-start/warmup/codegen (heavy, unrepresentative
-    # interference) — measured 4-6x inflation.  All peers signal ready
-    # after warmup and wait for "go"; timed regions then align.
-    barrier = os.environ.get("SPARK_GRAFT_BARRIER")
-    if barrier:
-        import pathlib as _pl
-
-        bdir = _pl.Path(barrier)
-        (bdir / f"ready_{slice_idx}").touch()
-        while not (bdir / "go").exists():
-            time.sleep(0.05)
 
     # SPARK_GRAFT_REPLAY_MODE=stream drives the PRODUCT surface — the
     # Structured Streaming tailer (file source → foreachBatch merge,
@@ -134,7 +105,7 @@ def main() -> None:
     for i in range(reps):
         d = f"{work}/lake_{cores}_b{batches}_{i}"
         shutil.rmtree(d, ignore_errors=True)
-        lake = HashLakeTable.create(spark, d, target_schema(), num_buckets=num_buckets)
+        lake = HashLakeTable.create(spark, d, target_schema())
         if stream_mode:
             from investigraph_etl_spark.streaming.tailer import tail_changelog
 
@@ -143,37 +114,20 @@ def main() -> None:
             per_trigger = max(1, (len(chunk_files) + batches - 1) // batches)
             t0 = time.monotonic()
             q = tail_changelog(
-                spark, log_dir, lake, ckpt,
-                max_files_per_trigger=per_trigger,
-                available_now=True,
-                reduce_batch=False,
-                compact_mode="async",
+                spark, log_dir, lake, ckpt, max_files_per_trigger=per_trigger
             )
             q.awaitTermination()
-            lake.wait_for_compaction()
             times.append(round(time.monotonic() - t0, 2))
             if final_rows is None:
                 final_rows = lake.read().count()
             continue
         t0 = time.monotonic()
         if len(groups) == 1:
-            # bulk replay: events/doc ≫ 1 → the in-batch reduce pays
-            # for itself in write volume; keep it
             batch = spark.read.schema(change_schema()).parquet(*groups[0])
-            if slice_mod > 1:
-                from pyspark.sql import functions as F
-
-                batch = batch.filter(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(slice_mod))
-                    == F.lit(slice_idx)
-                )
             lake.merge(prepare_batch(batch), 0)
         else:
-            # sustained micro-batch ingest: low in-batch dup ratio →
-            # skip the reduce (read-time LWW subsumes it) and fold
-            # deltas on the background thread, overlapped with the
-            # next commits' write jobs.  The final wait is inside the
-            # timed region: steady state must include compaction.
+            # sustained micro-batch ingest: one commit per group, each
+            # folding its threshold buckets before it returns
             derived = None
             if derived_mode:
                 from investigraph_etl_spark.operators.incremental import (
@@ -188,15 +142,11 @@ def main() -> None:
                 refreshes: list[float] = []
             for bid, group in enumerate(groups):
                 batch = spark.read.schema(change_schema()).parquet(*group)
-                lake.merge(
-                    prepare_batch(batch), bid,
-                    reduce_batch=False, compact_mode="async",
-                )
+                lake.merge(prepare_batch(batch), bid)
                 if derived is not None:
                     tr = time.monotonic()
                     derived.refresh(lake)
                     refreshes.append(round(time.monotonic() - tr, 3))
-            lake.wait_for_compaction()
             if derived is not None:
                 refresh_times_by_rep.append(refreshes)
         times.append(round(time.monotonic() - t0, 2))
